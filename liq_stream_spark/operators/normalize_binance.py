@@ -11,12 +11,18 @@ Reference semantics (binance_adapter.py:41-94):
 - any normalization error (e.g. unparsable float) skips that event only
   (binance_adapter.py:93-94) — here: try_cast NULL on a chosen value → drop
 
+Parse once: the frame's ``from_json`` is the ``explode`` argument, so every
+predicate on an event stays above the generator and never re-runs it.
+
 Deviation (documented): ``raw`` is ``to_json`` of the *typed* event struct —
 compact like ``json.dumps(...,separators=(",",":"))`` but with schema field
 order and without unknown wire keys.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -28,7 +34,7 @@ from liq_stream_spark.functions import (
     side_from_order_side,
     truthy_coalesce,
 )
-from liq_stream_spark.schema import BINANCE_EVENT_SCHEMA
+from liq_stream_spark.schema import BINANCE_EVENT_SCHEMA, BINANCE_ORDER_SCHEMA
 from liq_stream_spark.session import case_sensitive_analysis
 
 
@@ -57,20 +63,21 @@ def normalize_binance(
             frames = frames.withColumn("ts_ingest_ms", now_ms())
 
         # N1: single-object frames parse as a 1-element array under ArrayType;
-        # non-JSON frames ("ping", garbage) parse to NULL and are filtered (F5).
-        events = (
-            frames.select(
-                F.from_json("value", T.ArrayType(BINANCE_EVENT_SCHEMA)).alias("evs"),
-                "ts_ingest_ms",
-            )
-            .filter(F.col("evs").isNotNull())
-            .select(F.explode("evs").alias("ev"), "ts_ingest_ms")
+        # non-JSON frames ("ping", garbage) parse to NULL, and explode(NULL)
+        # yields no rows (F5). The parse is the generator's argument, so the
+        # predicates below stay above it and never re-run it.
+        events = frames.select(
+            F.explode(F.from_json("value", T.ArrayType(BINANCE_EVENT_SCHEMA))).alias(
+                "ev"
+            ),
+            "ts_ingest_ms",
         )
 
         o = F.col("ev.o")
-        # `if not o: continue` — missing o → NULL struct; {} → struct of NULLs
-        # whose compact JSON is '{}' (empty dict is falsy too).
-        events = events.filter(o.isNotNull() & (F.to_json(o) != "{}"))
+        # `if not o: continue` — a missing o and {} (the empty dict is falsy)
+        # both parse to an o without a single non-NULL field
+        has_field = (o[f].isNotNull() for f in BINANCE_ORDER_SCHEMA.names)
+        events = events.filter(reduce(operator.or_, has_field))
 
         price_raw = truthy_coalesce(o["ap"], o["p"], F.lit("0.0"))
         qty_raw = truthy_coalesce(o["l"], o["z"], o["q"], F.lit("0.0"))

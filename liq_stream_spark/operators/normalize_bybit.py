@@ -13,12 +13,23 @@ Reference semantics (bybit_adapter.py:145-227):
   (bybit_adapter.py:197)
 - ts: ``T`` (new, ms) else ``updatedTimeE6/1000`` (legacy, µs→ms, N10) else
   frame ``ts``
+
+Parse once, in one scan: the frame is parsed with ``data`` kept as its JSON
+text, and that text is parsed once as an array of rows carrying both
+channels' fields; the topic decides which fields a row reads and which
+schema its ``raw`` is serialized with. The row parse is the ``explode``
+argument, so no predicate can copy either parse.
+
+Deviation (documented): a frame whose ``data`` is a JSON *string* that
+itself holds JSON is read as that JSON; the reference skips it (a str has
+no ``.get``). No venue sends double-encoded data.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from liq_stream_spark.functions import (
     now_ms,
@@ -28,9 +39,10 @@ from liq_stream_spark.functions import (
 )
 from liq_stream_spark.session import case_sensitive_analysis
 from liq_stream_spark.schema import (
-    BYBIT_FRAME_LEGACY_DICT_SCHEMA,
-    BYBIT_FRAME_LEGACY_LIST_SCHEMA,
-    BYBIT_FRAME_NEW_SCHEMA,
+    BYBIT_FRAME_SCHEMA,
+    BYBIT_LEGACY_ROW_SCHEMA,
+    BYBIT_NEW_ROW_SCHEMA,
+    BYBIT_ROW_SCHEMA,
 )
 
 
@@ -55,100 +67,65 @@ def _build(frames: DataFrame, mk: str) -> DataFrame:
     if "ts_ingest_ms" not in frames.columns:
         frames = frames.withColumn("ts_ingest_ms", now_ms())
 
-    topic = F.get_json_object("value", "$.topic")
-    frames = frames.withColumn("topic", topic).filter(
-        F.col("topic").isNotNull() & (F.col("topic") != "")
+    # Topicless, other-topic and unparsable frames parse no rows, and
+    # explode(NULL) yields none: no filter of their own.
+    f = F.col("f")
+    topic, data = f["topic"], f["data"]
+    is_new = topic.startswith("allLiquidation.")
+    # new channel: data must be a list; legacy: a dict or a list — a dict
+    # parses as a one-element array (bybit_adapter.py:165-169)
+    rows_json = F.when(
+        (is_new & data.startswith("[")) | topic.startswith("liquidation."), data
     )
-
-    # --- new channel: allLiquidation.<SYMBOL>, data = list of compact rows
-    new_rows = (
-        frames.filter(F.col("topic").startswith("allLiquidation."))
-        .select(
-            F.from_json("value", BYBIT_FRAME_NEW_SCHEMA).alias("f"), "ts_ingest_ms"
-        )
-        .filter(F.col("f").isNotNull())
-        .select(
-            F.col("f.ts").alias("msg_ts"),
-            F.explode(F.col("f.data")).alias("liq"),
-            "ts_ingest_ms",
-        )
-        .select(
-            "msg_ts",
-            "ts_ingest_ms",
-            F.col("liq.s").alias("s"),
-            F.lit(None).cast("string").alias("symbol_legacy"),
-            F.col("liq.S").alias("S"),
-            F.lit(None).cast("string").alias("side_legacy"),
-            F.col("liq.v").alias("v"),
-            F.lit(None).cast("string").alias("size"),
-            F.col("liq.p").alias("p"),
-            F.lit(None).cast("string").alias("price_legacy"),
-            F.col("liq.T").alias("T"),
-            F.lit(None).cast("string").alias("updatedTimeE6"),
-            F.to_json(F.col("liq")).alias("raw"),
-        )
-    )
-
-    # --- legacy channel: liquidation.<SYMBOL>, data = dict OR list
-    legacy = frames.filter(F.col("topic").startswith("liquidation."))
-    legacy_parsed = legacy.select(
-        F.from_json("value", BYBIT_FRAME_LEGACY_LIST_SCHEMA).alias("fl"),
-        F.from_json("value", BYBIT_FRAME_LEGACY_DICT_SCHEMA).alias("fd"),
+    rows = frames.select(
+        F.from_json("value", BYBIT_FRAME_SCHEMA).alias("f"), "ts_ingest_ms"
+    ).select(
+        f["ts"].alias("msg_ts"),
+        is_new.alias("is_new"),
+        F.explode(F.from_json(rows_json, T.ArrayType(BYBIT_ROW_SCHEMA))).alias(
+            "liq"
+        ),
         "ts_ingest_ms",
     )
-    # dict-shaped data parses to NULL under the list schema and vice versa;
-    # wrap the dict form into a 1-element array and take whichever resolved
-    # (bybit_adapter.py:165-169).
-    legacy_rows = (
-        legacy_parsed.select(
-            F.coalesce(F.col("fl.ts"), F.col("fd.ts")).alias("msg_ts"),
-            F.coalesce(F.col("fl.data"), F.array(F.col("fd.data"))).alias("rows"),
-            "ts_ingest_ms",
-        )
-        .filter(F.col("rows").isNotNull())
-        .select("msg_ts", F.explode("rows").alias("liq"), "ts_ingest_ms")
-        .filter(F.col("liq").isNotNull())
-        .select(
-            "msg_ts",
-            "ts_ingest_ms",
-            F.lit(None).cast("string").alias("s"),
-            F.col("liq.symbol").alias("symbol_legacy"),
-            F.lit(None).cast("string").alias("S"),
-            F.col("liq.side").alias("side_legacy"),
-            F.lit(None).cast("string").alias("v"),
-            F.col("liq.size").alias("size"),
-            F.lit(None).cast("string").alias("p"),
-            F.col("liq.price").alias("price_legacy"),
-            F.lit(None).cast("long").alias("T"),
-            F.col("liq.updatedTimeE6").alias("updatedTimeE6"),
-            F.to_json(F.col("liq")).alias("raw"),
-        )
-    )
 
-    rows = new_rows.unionByName(legacy_rows)
+    liq, new = F.col("liq"), F.col("is_new")
+
+    def new_f(name):
+        return F.when(new, liq[name])
+
+    def legacy_f(name):
+        return F.when(~new, liq[name])
+
+    def raw(schema):
+        # compact JSON of the row as its channel's schema types it
+        return F.to_json(
+            F.when(liq.isNotNull(), F.struct(*[liq[c] for c in schema.names]))
+        )
 
     # Reference parity: when updatedTimeE6 is *present* but unparsable,
     # ``int(liq["updatedTimeE6"])`` raises and the whole row is dropped
     # (bybit_adapter.py:203-204, caught at :226) — it does NOT fall through
-    # to the frame ts. Only the T-is-null (legacy) arm can reach it.
+    # to the frame ts. Only the legacy channel carries it.
+    u_e6 = legacy_f("updatedTimeE6")
     rows = rows.filter(
-        ~(
-            F.col("T").isNull()
-            & F.col("updatedTimeE6").isNotNull()
-            & F.col("updatedTimeE6").try_cast("long").isNull()
-        )
+        # a NULL element of a new-channel list is kept as an empty row; the
+        # legacy channel skips it
+        (new | liq.isNotNull())
+        & ~(u_e6.isNotNull() & u_e6.try_cast("long").isNull())
     )
 
     # _to_float(x or 0): truthy-coalesce then cast; failure → 0.0, row kept
-    qty = F.coalesce(truthy_double(F.col("v"), F.col("size"), F.lit("0")), F.lit(0.0))
+    qty = F.coalesce(
+        truthy_double(new_f("v"), legacy_f("size"), F.lit("0")), F.lit(0.0)
+    )
     price = F.coalesce(
-        truthy_double(F.col("p"), F.col("price_legacy"), F.lit("0")), F.lit(0.0)
+        truthy_double(new_f("p"), legacy_f("price"), F.lit("0")), F.lit(0.0)
     )
     # µs→ms: int(int(u)/1000) truncates toward zero; timestamps are positive
     # so integer division matches (N10).
     ts_exch = F.coalesce(
-        F.col("T"),
-        (F.col("updatedTimeE6").try_cast("long") / 1000).cast("long"),
+        new_f("T"),
+        (u_e6.try_cast("long") / 1000).cast("long"),
         F.col("msg_ts"),
     )
 
@@ -156,11 +133,9 @@ def _build(frames: DataFrame, mk: str) -> DataFrame:
         F.lit("bybit").alias("exchange"),
         F.lit(mk).alias("market"),
         F.coalesce(
-            truthy_coalesce(F.col("s"), F.col("symbol_legacy")), F.lit("")
+            truthy_coalesce(new_f("s"), legacy_f("symbol")), F.lit("")
         ).alias("symbol"),
-        side_from_bybit(truthy_coalesce(F.col("S"), F.col("side_legacy"))).alias(
-            "side"
-        ),
+        side_from_bybit(truthy_coalesce(new_f("S"), legacy_f("side"))).alias("side"),
         qty.alias("qty"),
         price.alias("price"),
         F.when((price != 0.0) & (qty != 0.0), price * qty)
@@ -168,5 +143,7 @@ def _build(frames: DataFrame, mk: str) -> DataFrame:
         .alias("notional"),
         ts_exch.alias("ts_exch_ms"),
         F.col("ts_ingest_ms"),
-        F.col("raw"),
+        F.when(new, raw(BYBIT_NEW_ROW_SCHEMA))
+        .otherwise(raw(BYBIT_LEGACY_ROW_SCHEMA))
+        .alias("raw"),
     )

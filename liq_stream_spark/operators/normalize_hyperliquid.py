@@ -16,8 +16,12 @@ Reference semantics (hyperliquid_adapter.py:166-257):
 - raw = compact JSON of the *enriched* dict (N21,
   hyperliquid_adapter.py:194-211,243)
 
-The events array is parsed as array<string> because [taker, fill] is a
-mixed-type JSON tuple; element 0/1 are re-extracted per pair.
+Parse once per wire level (line, pair, fill — three ``from_json``, no
+``get_json_object``). The events array is parsed as array<string> because
+[taker, fill] is a mixed-type JSON tuple; one ``transform`` parses each pair
+as array<string> and its fill as a struct, and that array is the argument of
+the ``posexplode``. Every predicate on a parsed field therefore sits above the
+``Generate``, where Catalyst cannot copy the parse into it.
 
 Documented deviation: the enriched struct types block_time as long, so a
 (rare) ISO-string block_time is omitted from ``raw``'s JSON while still
@@ -29,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from liq_stream_spark.functions import now_ms, side_from_hl, to_ms, truthy_coalesce
 from liq_stream_spark.schema import HL_FILL_SCHEMA, HL_LINE_SCHEMA
@@ -50,42 +55,30 @@ def normalize_hyperliquid(
 
     lines = frames.filter(F.col("value").contains("liquidation"))  # F4
 
-    pairs = (
-        lines.select(
-            F.from_json("value", HL_LINE_SCHEMA).alias("rec"), "ts_ingest_ms"
-        )
-        .filter(F.col("rec").isNotNull() & F.col("rec.events").isNotNull())
-        .select(
-            F.col("rec.local_time").alias("local_time"),
-            F.col("rec.block_time").alias("block_time"),
-            F.col("rec.block_number").alias("block_number"),
-            F.posexplode(F.col("rec.events")).alias("ev_idx", "pair"),
-            "ts_ingest_ms",
-        )
+    # posexplode(NULL) yields no rows: unparsable lines and missing events
+    # need no filter of their own
+    pairs = lines.select(
+        F.from_json("value", HL_LINE_SCHEMA).alias("rec"), "ts_ingest_ms"
+    ).select(
+        F.col("rec.local_time").alias("local_time"),
+        F.col("rec.block_time").alias("block_time"),
+        F.col("rec.block_number").alias("block_number"),
+        F.posexplode(
+            F.transform(
+                F.transform(
+                    "rec.events", lambda p: F.from_json(p, T.ArrayType(T.StringType()))
+                ),
+                _taker_and_fill,
+            )
+        ).alias("ev_idx", "ev"),
+        "ts_ingest_ms",
     )
-
-    taker = F.get_json_object("pair", "$[0]")
-    fill_json = F.get_json_object("pair", "$[1]")
-    third = F.get_json_object("pair", "$[2]")
-
-    fills = (
-        pairs.withColumn("taker", taker)
-        .withColumn("fill_json", fill_json)
-        # `len(ev) == 2` and fill must be an object (":166-180")
-        .filter(
-            F.col("taker").isNotNull()
-            & F.col("fill_json").isNotNull()
-            & third.isNull()
-            & F.col("fill_json").startswith("{")
-        )
-        .withColumn("fill", F.from_json("fill_json", HL_FILL_SCHEMA))
-        .filter(F.col("fill").isNotNull())
-    )
+    fills = pairs.select("*", "ev.taker", "ev.fill").drop("ev")
 
     liq = F.col("fill.liquidation")
     sz_abs = F.abs(F.col("fill.sz").try_cast("double"))
     fills = fills.filter(
-        liq.isNotNull()  # F2: must be a liquidation fill
+        liq.isNotNull()  # F2: must be a liquidation fill (also drops bad pairs)
         & (F.col("taker") == liq["liquidatedUser"])  # F2: self-liquidation row
         & sz_abs.isNotNull()
         & (sz_abs >= F.lit(float(min_abs_sz)))  # F3
@@ -172,6 +165,20 @@ def normalize_hyperliquid(
         F.col("ts_ingest_ms"),
         F.to_json(F.col("e")).alias("raw"),
         *extra,
+    )
+
+
+def _taker_and_fill(pair):
+    """One parsed pair -> {taker, fill}. ``len(ev) == 2`` and the fill must
+    be an object (":166-180"); anything else leaves ``fill`` NULL. A JSON
+    null taker compares as the text "null" (tests/fixtures/edge pins it)."""
+    fill_json = F.try_element_at(pair, F.lit(2))
+    return F.struct(
+        F.coalesce(F.try_element_at(pair, F.lit(1)), F.lit("null")).alias("taker"),
+        F.when(
+            (F.size(pair) == 2) & fill_json.startswith("{"),
+            F.from_json(fill_json, HL_FILL_SCHEMA),
+        ).alias("fill"),
     )
 
 

@@ -10,6 +10,10 @@ Reference semantics (okx_adapter.py:43-107):
 - notional: NULL unless both truthy (N16)
 - ts: ``int(d["ts"]) if d.get("ts")`` — Python truthiness, so "" → NULL (N6)
 - raw: the detail object only (N21, okx_adapter.py:103)
+
+Parse once: one ``from_json`` types the frame down to the details, and the
+channel test sits in the first ``explode``'s argument, so no predicate
+above it can copy the parse.
 """
 
 from __future__ import annotations
@@ -39,16 +43,17 @@ def normalize_okx(frames: DataFrame, market: str = "usdt") -> DataFrame:
     if "ts_ingest_ms" not in frames.columns:
         frames = frames.withColumn("ts_ingest_ms", now_ms())
 
-    inst = (
-        frames.select(
-            F.from_json("value", OKX_FRAME_SCHEMA).alias("f"), "ts_ingest_ms"
-        )
-        .filter(
-            F.col("f").isNotNull()
-            & (F.col("f.arg.channel") == "liquidation-orders")
-            & F.col("f.data").isNotNull()
-        )
-        .select(F.explode("f.data").alias("liq"), "ts_ingest_ms")
+    # explode(NULL) yields no rows: unparsable frames, other channels and a
+    # NULL data need no filter. The channel test lives in the generator's
+    # argument, so no predicate can copy the parse.
+    f = F.col("f")
+    inst = frames.select(
+        F.from_json("value", OKX_FRAME_SCHEMA).alias("f"), "ts_ingest_ms"
+    ).select(
+        F.explode(F.when(f["arg"]["channel"] == "liquidation-orders", f["data"])).alias(
+            "liq"
+        ),
+        "ts_ingest_ms",
     )
 
     inst_id = F.coalesce(F.col("liq.instId"), F.lit(""))

@@ -44,29 +44,23 @@ from __future__ import annotations
 # cheap JVM-only entries lead (cold-session Arrow/daemon spin-up must
 # not land on a pandas-UDF query).
 CHANGED_SINCE_GREEN: list[str] = [
-    # r14 (optimization round 2 of 2) — CORRECTNESS_r13 re-signed the
-    # full r13 changed tier (50/50 green, led by these entries), so the
-    # r14 baseline resets to the new round's committed changes. Each
-    # entry below is oracle-identical by the round's rules (re-driven
-    # green at sf0.01 + sf0.1-parity before its commit); cheap JVM-only
-    # entries lead per the tier convention.
+    # Round 15 — CORRECTNESS_r14 re-signed the full r14 changed tier
+    # (g01/g02/d06/d07/d14/p13/p14 led the sample and hash-matched), so
+    # the baseline resets to this round's committed changes.
     #
-    # - g01 (+g02 per the module-change convention, graph.py): edge pin
-    #   keyed on the vertex-count-vs-broadcast-threshold regime — large
-    #   graphs get a repartition+sort+persist pin so the per-round rank
-    #   SMJ streams the cache with no edge-side Exchange/Sort.
-    "g01_pagerank",
-    "g02_triangle_counts",
-    # - d06/d07/d14/p13/p14: the connected-components loop propagates
-    #   only CHANGED labels per round (delta), broadcast-hints the
-    #   label-sized join sides below the session broadcast threshold
-    #   (exact node count from round 1's convergence aggregate), and
-    #   re-pins the edges sorted+persisted in the large regime.
-    "d06_dedup_clusters",
-    "d07_dedup_survivors",
-    "d14_verified_dedup_clusters",
-    "p13_leakage_free_split",
-    "p14_quality_survivors",
+    # - every query over plans/liquidations.py::unified_liquidations: the
+    #   five venue normalizers parse each wire level once (each parse is a
+    #   generator's argument, so no pushed-down predicate copies it; Bybit
+    #   reads its input in one scan). Output rows are unchanged on every
+    #   fixture; all eight are JVM-only.
+    "liq_normalize_unified",
+    "liq_venue_stats",
+    "liq_top_by_notional",
+    "liq_hourly_by_symbol",
+    "liq_sixhour_dashboard",
+    "liq_cascades",
+    "liq_raw_variant",
+    "liq_unified_rows",
 ]
 
 

@@ -80,8 +80,10 @@ BINANCE_EVENT_SCHEMA = T.StructType(
 # Bybit frames (reference: bybit_adapter.py:174-182)
 # New channel:    {"topic":"allLiquidation.X","ts":ms,"data":[{T,s,S,v,p}]}
 # Legacy channel: {"topic":"liquidation.X","ts":ms,"data":{updatedTimeE6,symbol,side,size,price}}
-# `data` is list-of-compact-rows (new) or dict-or-list (legacy): parse both
-# shapes from the same frame via two tolerant schemas.
+# `data` is list-of-compact-rows (new) or dict-or-list (legacy). The frame is
+# parsed once with `data` kept as its JSON text; the text is parsed once
+# as an array of rows carrying both channels' fields (a dict parses as a
+# one-element array), and the topic decides which fields a row uses.
 # ---------------------------------------------------------------------------
 
 BYBIT_NEW_ROW_SCHEMA = T.StructType(
@@ -104,27 +106,15 @@ BYBIT_LEGACY_ROW_SCHEMA = T.StructType(
     ]
 )
 
-BYBIT_FRAME_NEW_SCHEMA = T.StructType(
-    [
-        T.StructField("topic", T.StringType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("data", T.ArrayType(BYBIT_NEW_ROW_SCHEMA)),
-    ]
+BYBIT_ROW_SCHEMA = T.StructType(
+    BYBIT_NEW_ROW_SCHEMA.fields + BYBIT_LEGACY_ROW_SCHEMA.fields
 )
 
-BYBIT_FRAME_LEGACY_LIST_SCHEMA = T.StructType(
+BYBIT_FRAME_SCHEMA = T.StructType(
     [
         T.StructField("topic", T.StringType()),
         T.StructField("ts", T.LongType()),
-        T.StructField("data", T.ArrayType(BYBIT_LEGACY_ROW_SCHEMA)),
-    ]
-)
-
-BYBIT_FRAME_LEGACY_DICT_SCHEMA = T.StructType(
-    [
-        T.StructField("topic", T.StringType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("data", BYBIT_LEGACY_ROW_SCHEMA),
+        T.StructField("data", T.StringType()),  # raw JSON, parsed per topic
     ]
 )
 
@@ -173,8 +163,8 @@ OKX_FRAME_SCHEMA = T.StructType(
 # Hyperliquid node fill lines (reference: hyperliquid_adapter.py:108-125)
 # events is an array of [taker_address, fill] pairs. JSON arrays with mixed
 # element types can't be a typed Spark array, so events elements are kept as
-# raw JSON strings and re-parsed per element (taker = element 0 string,
-# fill = element 1 struct).
+# raw JSON text; each pair is parsed once as array<string> (taker = element
+# 1, fill = element 2) and each fill once as HL_FILL_SCHEMA.
 # ---------------------------------------------------------------------------
 
 HL_LIQUIDATION_SCHEMA = T.StructType(

@@ -9,6 +9,8 @@ ones that also matter on a real multi-executor cluster at 100 TB:
 - UTC session timezone so timestamp semantics match the DuckDB oracle and
   are stable across clusters
 - Arrow enabled for the few Pandas-UDF paths (multimodal decode)
+- driver memory from the host: half its RAM unless ``SPARK_DRIVER_MEMORY``
+  says otherwise (local mode runs the executor inside the driver JVM)
 """
 
 from __future__ import annotations
@@ -39,6 +41,14 @@ def case_sensitive_analysis(spark: SparkSession) -> Iterator[None]:
         spark.conf.set("spark.sql.caseSensitive", prev)
 
 
+def _host_driver_memory() -> str:
+    """Half the host's physical memory, in whole GiB (at least 1g). In
+    local mode the driver JVM is also the executor; the other half is left
+    to the Python workers, the page cache and the OS."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, total // 2 // 1024**3)}g"
+
+
 def get_spark(
     app_name: str = "liq_stream_spark",
     master: str | None = None,
@@ -67,7 +77,10 @@ def get_spark(
         # read as long and convert in the loader (plans/tables.py)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -6,6 +6,8 @@ import json
 from datetime import datetime, timezone
 from pathlib import Path
 
+import pytest
+
 from liq_stream_spark.operators import (
     normalize_aster,
     normalize_binance,
@@ -261,3 +263,74 @@ def test_hyperliquid(spark):
     assert sorted(r["symbol"] for r in thresh) == [
         "AVAXUSDC", "DOGEUSDC", "ETHUSDC", "SOLUSDC",
     ]
+
+
+# Malformed and boundary wire variants per venue (tests/fixtures/edge/*.jsonl)
+# and their expected rows, recorded from the normalizers as they stood
+# before the parse-once rewrite; every variant must keep those exact rows.
+EDGE = FIXTURES / "edge"
+EDGE_CASES = {
+    "binance_usdt": ("binance", normalize_binance, {"market": "usdt"}),
+    "binance_coin": ("binance", normalize_binance, {"market": "coin"}),
+    "aster": ("binance", normalize_aster, {}),
+    "bybit_usdt": ("bybit", normalize_bybit, {"market": "usdt"}),
+    "bybit_coin": ("bybit", normalize_bybit, {"market": "coin"}),
+    "okx_usdt": ("okx", normalize_okx, {"market": "usdt"}),
+    "okx_coin": ("okx", normalize_okx, {"market": "coin"}),
+    "hyperliquid": ("hyperliquid", normalize_hyperliquid, {}),
+    "hyperliquid_nodedup_key": (
+        "hyperliquid",
+        normalize_hyperliquid,
+        {"dedup": False, "keep_dedup_key": True},
+    ),
+    "hyperliquid_min1": ("hyperliquid", normalize_hyperliquid, {"min_abs_sz": 1.0}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EDGE_CASES))
+def test_edge_variants_match_pins(spark, case):
+    venue, fn, kw = EDGE_CASES[case]
+    frames = read_jsonl_frames(spark, str(EDGE / f"{venue}.jsonl"), INGEST)
+    got = [r.asDict() for r in fn(frames, **kw).collect()]
+    expected = json.loads((EDGE / "expected.json").read_text())[case]
+
+    def key(r):
+        return json.dumps(r, sort_keys=True)
+
+    assert sorted(got, key=key) == sorted(expected, key=key)
+
+
+# Wire levels each normalizer parses: Binance/Aster the frame; OKX the frame
+# (data[] and details[] are typed inside it); Bybit the frame, then its data
+# text; Hyperliquid the line, each [taker, fill] pair, each fill.
+PARSE_LEVELS = [
+    ("binance", normalize_binance, "binance_force_order.jsonl", {}, 1),
+    ("aster", normalize_aster, "binance_force_order.jsonl", {}, 1),
+    ("okx", normalize_okx, "okx_liquidation_orders.jsonl", {}, 1),
+    ("bybit", normalize_bybit, "bybit_liquidation.jsonl", {}, 2),
+    ("hyperliquid", normalize_hyperliquid, "hyperliquid_fills.jsonl", {}, 3),
+    (
+        "hyperliquid_stream",
+        normalize_hyperliquid,
+        "hyperliquid_fills.jsonl",
+        {"dedup": False, "keep_dedup_key": True},
+        3,
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "fn, fixture, kw, levels",
+    [p[1:] for p in PARSE_LEVELS],
+    ids=[p[0] for p in PARSE_LEVELS],
+)
+def test_each_wire_level_parsed_once(spark, fn, fixture, kw, levels):
+    """A predicate on a parsed field that Catalyst can push below the
+    projection computing the parse gets a copy of the whole parse. The
+    executed plan must hold one from_json per wire level, no
+    get_json_object re-parse, and one scan of the input."""
+    frames = read_jsonl_frames(spark, str(FIXTURES / fixture), INGEST)
+    plan = fn(frames, **kw)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("from_json(") == levels, plan
+    assert "get_json_object(" not in plan, plan
+    assert plan.count("FileScan") == 1, plan
